@@ -65,26 +65,40 @@ def _list_data_files(path: str, sub: str) -> list[str]:
 
 
 def _commit_log(path: str, version: int, entry: dict) -> None:
-    """Atomic optimistic-concurrency commit: create `<version>.json`
-    if-and-only-if absent (O_CREAT|O_EXCL — one syscall, atomic on
-    POSIX). Two writers that both computed `current_version()+1` race
-    here and exactly one wins; the loser raises CommitConflictError
-    with the log untouched. Data files are written BEFORE this call
-    under a per-attempt unique subdirectory, so a losing attempt
-    leaves only unreferenced files (vacuum reclaims them), never a
-    half-visible version."""
-    os.makedirs(_log_dir(path), exist_ok=True)
-    target = os.path.join(_log_dir(path), f"{version}.json")
+    """Atomic optimistic-concurrency commit: publish `<version>.json`
+    if-and-only-if absent, with its FULL content. The entry is written
+    to a temp file in `_log/` first (its name does not end in `.json`,
+    so `current_version` never parses it), then hard-linked to the
+    target — `link(2)` fails with EEXIST when the target exists, so it
+    is an atomic put-if-absent of a complete file. (Creating the
+    target with O_EXCL and THEN writing it let a concurrent reader see
+    the version empty or half-written.) Two writers that both computed
+    `current_version()+1` race here and exactly one wins; the loser
+    raises CommitConflictError with the log untouched. Data files are
+    written BEFORE this call under a per-attempt unique subdirectory,
+    so a losing attempt leaves only unreferenced files (vacuum
+    reclaims them), never a half-visible version."""
+    logd = _log_dir(path)
+    os.makedirs(logd, exist_ok=True)
+    # commit wall clock (TIMESTAMP AS OF); a copy, so a caller that
+    # retries with the same dict stamps its retry afresh
+    body = {**entry, "ts": entry.get("ts", time.time())}
+    tmp = os.path.join(logd, f".{version}.{uuid.uuid4().hex}.tmp")
     try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-    except FileExistsError:
-        raise CommitConflictError(
-            f"version {version} of {path} was committed by a concurrent "
-            "writer; re-read the table and retry"
-        ) from None
-    entry.setdefault("ts", time.time())  # commit wall clock (TIMESTAMP AS OF)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(entry, fh, indent=1)
+        with open(tmp, "w") as fh:
+            json.dump(body, fh, indent=1)
+        try:
+            os.link(tmp, os.path.join(logd, f"{version}.json"))
+        except FileExistsError:
+            raise CommitConflictError(
+                f"version {version} of {path} was committed by a concurrent "
+                "writer; re-read the table and retry"
+            ) from None
+    finally:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass
 
 
 def _write_log(path: str, version: int, add: list[str], remove: list[str]) -> None:
@@ -1886,8 +1900,8 @@ def delete_where(spark: SparkSession, path: str, predicate,
     `predicate` (SQL string or Column) deleted WITHOUT rewriting any
     data file. Writes one small parquet of (file, row_index)
     positions under a per-attempt `v<N>-<attempt>dv/` directory and
-    commits `{"dv_add": {...}}` through the same atomic O_EXCL log
-    protocol as every other writer (a lost race raises
+    commits `{"dv_add": {...}}` through the same atomic put-if-absent
+    log protocol as every other writer (a lost race raises
     CommitConflictError; the orphaned DV parquet is vacuum food).
     Returns the new version — or the current one unchanged when no
     row matches (no empty versions).
@@ -3374,7 +3388,7 @@ def checkpoint_log(path: str, at_version: int | None = None,
         entry["copy_sources"] = sorted(copies_pre)
     # ATOMIC replace (write-temp + rename), not an in-place overwrite:
     # checkpoint deliberately REPLACES an existing committed entry
-    # (squash-in-place), so O_EXCL doesn't apply — but a reader
+    # (squash-in-place), so put-if-absent doesn't apply — but a reader
     # replaying the log concurrently must see either the old or the
     # new entry, never a torn write. POSIX rename is the atomic swap
     # (Delta writes checkpoint files the same way).

@@ -16,12 +16,13 @@ bounds its mistakes on separable data; as a corpus-quality filter the
 decision boundary, not calibrated probabilities, is what's consumed.
 
 Scale shape: features are a (doc, bucket, count) relation — one
-corpus scan, explode + groupBy (the `shingle_index` budget). Each
-epoch is: one broadcast-sized weight join (D buckets ≪ corpus), one
-per-doc score aggregate (shuffle on doc_id, reusable exchange), one
-error semi-join, one bucket-keyed delta aggregate (map-side combined,
-D-bounded output). Epochs are unrolled driver control flow — no
-collect in the loop; weight relations are D rows, never corpus-sized.
+corpus scan, explode + groupBy (the `shingle_index` budget) — packed
+once to one array row per doc. Each epoch is one scan of the packed
+rows: a score fold against a literal weight map (≤ D entries, held on
+the driver), an error filter, and ONE bucket-keyed aggregate
+(map-side combined, ≤ D+1 output rows) that carries both the weight
+delta and the pocket error count. Epochs are driver control flow; the
+only per-epoch pull is that bounded aggregate, never row data.
 """
 
 from __future__ import annotations
@@ -71,27 +72,6 @@ def hashed_features(docs: DataFrame, id_col: str = "doc_id",
     return base.groupBy(id_col, "bucket").agg(F.count(F.lit(1)).cast("long").alias("x"))
 
 
-def _score(feats: DataFrame, lab: DataFrame, w: DataFrame | None,
-           id_col: str) -> DataFrame:
-    """(id, y, s): integer decision scores under weights `w` (w=None →
-    all-zero weights → s=0)."""
-    if w is None:
-        return lab.select(F.col(id_col), "y", F.lit(0).cast("long").alias("s"))
-    s = (
-        feats.join(F.broadcast(w), "bucket")
-        .groupBy(id_col)
-        .agg(F.sum(F.col("x") * F.col("w")).cast("long").alias("s"))
-    )
-    return lab.join(s, id_col, "left").select(
-        F.col(id_col), "y", F.coalesce(F.col("s"), F.lit(0)).cast("long").alias("s")
-    )
-
-
-def _errors(scored: DataFrame, id_col: str) -> DataFrame:
-    pred = F.when(F.col("s") > 0, F.lit(1)).otherwise(F.lit(-1))
-    return scored.filter(pred != F.col("y")).select(F.col(id_col), "y")
-
-
 def perceptron_train(docs: DataFrame, label: Column, epochs: int = 16,
                      id_col: str = "doc_id", text_col: str = "text",
                      dim: int = 1024, binary: bool = True) -> DataFrame:
@@ -125,35 +105,43 @@ def perceptron_train(docs: DataFrame, label: Column, epochs: int = 16,
     operator always pulled. What that buys, measured at sf0.1:
 
     - features PACK to one array row per doc (collect_list after the
-      one doc-keyed exchange), eagerly checkpointed once; every epoch
-      is then a single scan of |docs| rows — the former shape paid a
-      broadcast-weight join + a full (doc, bucket)-row aggregate
-      per epoch;
+      one doc-keyed exchange), checkpointed once — lazily, so epoch
+      0's action materialises it instead of a separate job; every
+      epoch is then a single scan of |docs| rows — the former shape
+      paid a broadcast-weight join + a full (doc, bucket)-row
+      aggregate per epoch;
     - scoring is an integer `aggregate` fold over the packed array
       against a literal weight map (≤ dim entries — constant-folded
       per task, never corpus-sized);
-    - ONE action per epoch: the bucket-keyed delta aggregate (over
-      only the misclassified docs' exploded features, map-side
-      combined to ≤ dim rows) UNION a sentinel row carrying the
-      misclassified-doc count — the pocket statistic and the update
-      arrive in the same ≤ dim+1-row pull. The former shape ran a
-      16-deep lazy-checkpoint chain whose broadcasts serialized 16
-      extra planning jobs.
+    - ONE action, and ONE exchange, per epoch: each misclassified
+      doc's feature array gets a sentinel element (b = -1, x = 1)
+      appended before the explode, so the single bucket-keyed
+      aggregate (map-side combined to ≤ dim+1 rows) yields the delta
+      Σ x·y per real bucket AND, as the sentinel bucket's count(1),
+      the misclassified-doc count — the pocket statistic and the
+      update arrive in the same pull. (The sentinel also counts docs
+      with no features, which the explode alone would drop.)
 
-    Isolated min-of-3 at sf0.1: train 10.2 → 5.4 s, eval 11.6 →
-    5.6 s (same output relation). Every driver pull is ≤ dim+1 rows —
-    algorithm state, never row data.
+    Each epoch's query is built from parsed SQL strings — the weight
+    map is one `map_from_arrays(array(..L), array(..L))` literal, and
+    the score fold, error predicate and explode are expression text —
+    so building an epoch costs a handful of py4j calls, not one per
+    literal Column (~4k per epoch at dim = 1024). Measured at sf0.1
+    on a 4-core host: building the 17 epochs takes 0.6-0.9 s instead
+    of 2.3-4.2 s with per-literal Columns, and the operator fires 39
+    jobs (two per epoch under AQE) instead of 57. Every driver pull
+    is ≤ dim+1 rows — algorithm state, never row data.
 
-    `dim` is bounded at 2^13 (fail-loud, ADVICE r11): each epoch
-    embeds a create_map literal of up to 2·dim arguments in the plan,
-    so an unbounded dim is a silently exploding plan/codegen, not a
-    bigger model. Wider feature spaces need the broadcast-join weight
-    shape this rewrite replaced."""
+    `dim` is bounded at 2^13 (fail-loud): each epoch parses and
+    embeds a weight-map literal of up to 2·dim entries in the plan,
+    so an unbounded dim is a silently exploding parse/plan, not a
+    bigger model. Wider feature spaces need a broadcast-join weight
+    relation instead of the literal."""
     if dim > 1 << 13:
         raise ValueError(
             f"perceptron_train: dim {dim} exceeds the 2^13 literal-"
             "weight-map budget (the per-epoch plan embeds 2*dim map "
-            "arguments); use a broadcast weight relation for wider "
+            "entries); use a broadcast weight relation for wider "
             "feature spaces"
         )
     lab = docs.select(F.col(id_col), label.cast("long").alias("y"))
@@ -174,51 +162,40 @@ def perceptron_train(docs: DataFrame, label: Column, epochs: int = 16,
                 F.expr("CAST(array() AS array<struct<b: bigint, x: bigint>>)"),
             ).alias("bx"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     w: dict[int, int] = {}
     iterates: list[dict[int, int]] = []
     err_counts: list[int] = []
     for k in range(epochs + 1):
         if w:
-            m = F.create_map(
-                *[
-                    F.lit(v).cast("long")
-                    for kv in sorted(w.items())
-                    for v in kv
-                ]
+            keys, vals = zip(*sorted(w.items()))
+            m = (
+                f"map_from_arrays(array({', '.join(f'{b}L' for b in keys)}), "
+                f"array({', '.join(f'{v}L' for v in vals)}))"
             )
-            s = F.aggregate(
-                F.col("bx"),
-                F.lit(0).cast("long"),
-                lambda acc, e: acc
-                + e["x"] * F.coalesce(F.element_at(m, e["b"]), F.lit(0).cast("long")),
-            )
+            s = f"aggregate(bx, 0L, (acc, e) -> acc + e.x * coalesce(element_at({m}, e.b), 0L))"
         else:
-            s = F.lit(0).cast("long")
-        pred = F.when(s > 0, F.lit(1)).otherwise(F.lit(-1))
-        errs = packed.filter(pred != F.col("y"))
+            s = "0L"
         # one bounded action: per-bucket delta (≤ dim rows) + the
-        # sentinel (-1) row carrying the pocket error count of the
-        # CURRENT iterate (iterate k-1; the final pass evaluates the
-        # last iterate and applies no update)
+        # sentinel (-1) bucket, whose count is the pocket error count
+        # of the CURRENT iterate (iterate k-1; the final pass evaluates
+        # the last iterate and applies no update)
         rows = (
-            errs.select(F.explode("bx").alias("e"), "y")
-            .groupBy(F.col("e.b").alias("bucket"))
-            .agg(F.sum(F.col("e.x") * F.col("y")).cast("long").alias("d"))
-            .unionAll(
-                errs.agg(F.count(F.lit(1)).cast("long").alias("d")).select(
-                    F.lit(-1).cast("long").alias("bucket"), "d"
-                )
+            packed.where(f"IF({s} > 0, 1, -1) <> y")
+            .selectExpr(
+                "explode(concat(bx, array(named_struct('b', -1L, 'x', 1L)))) AS e", "y"
             )
+            .groupBy("e.b")
+            .agg(F.expr("count(1)"), F.expr("CAST(sum(e.x * y) AS BIGINT)"))
             .collect()
         )
         n_err, delta = 0, {}
-        for r in rows:
-            if r["bucket"] == -1:
-                n_err = int(r["d"])
+        for b, n, d in rows:
+            if b == -1:
+                n_err = n
             else:
-                delta[int(r["bucket"])] = int(r["d"])
+                delta[b] = d
         if k > 0:
             err_counts.append(n_err)
         if k == epochs:

@@ -4208,11 +4208,13 @@ def text_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end (counts x integer weights, sign(0) pinned to -1,
     pocket picks the fewest-errors iterate, tie -> earliest), so the
     unrolled epoch replay in SQL matches bit-for-bit. Output = the
-    trained model: (bucket, w != 0) — a broadcast-sized relation. Per
-    epoch: one broadcast weight join + one doc-keyed score shuffle +
-    one D-bounded delta aggregate + one scalar error count (bounded
-    driver control flow, the connected_components contract). See
-    operators/classifier.py."""
+    trained model: (bucket, w != 0) — a broadcast-sized relation.
+    Features are packed once to one array row per doc; each epoch is
+    then one scan that scores every doc against a driver-held literal
+    weight map and one bucket-keyed aggregate over the misclassified
+    docs — one exchange, pulling the D-bounded delta and the pocket
+    error count together (bounded driver control flow, the
+    connected_components contract). See operators/classifier.py."""
     docs = load_table(spark, "documents", sf_dir)
     label = F.when(F.array_contains(F.split(F.col("text"), " "), "spark"), 1).otherwise(-1)
     return C.perceptron_train(docs, label, epochs=16, dim=1024)

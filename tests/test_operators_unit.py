@@ -3,6 +3,7 @@ covering the reference's edge-case semantics (SURVEY.md §7 hard parts):
 ragged release_date, first-wins dedup determinism, ragged-schema union,
 empty-input guards, null-guarded flattening."""
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -614,6 +615,94 @@ def test_perceptron_pocket_learns_separable_target(spark, sf_dir):
     )
     acc = stats.ok / stats.n
     assert acc >= 0.95, f"pocket perceptron accuracy {acc:.3f} < 0.95"
+
+
+def _pocket_reference(feats: dict, labels: dict, epochs: int) -> list:
+    """Plain-Python pocket perceptron: full-batch integer updates,
+    sign(0) = -1, the fewest-errors iterate wins (tie → earliest),
+    nonzero weights only."""
+    w: dict[int, int] = {}
+    iterates, errs = [], []
+    for k in range(epochs + 1):
+        wrong = [
+            d for d, y in labels.items()
+            if (1 if sum(x * w.get(b, 0) for b, x in feats.get(d, {}).items()) > 0
+                else -1) != y
+        ]
+        if k > 0:
+            errs.append(len(wrong))
+        if k == epochs:
+            break
+        for d in wrong:
+            for b, x in feats.get(d, {}).items():
+                w[b] = w.get(b, 0) + x * labels[d]
+        iterates.append(dict(w))
+    best = min(range(epochs), key=lambda i: (errs[i], i))
+    return sorted((b, v) for b, v in iterates[best].items() if v != 0)
+
+
+@pytest.mark.parametrize("target,epochs", [("spark", 16), ("none", 16), ("spark", 3)])
+def test_perceptron_train_matches_python_reference(spark, sf_dir, target, epochs):
+    """perceptron_train equals a plain-Python pocket perceptron over
+    the same collected hashed features, bit for bit. The 'spark'
+    target drives weights negative, so the parsed weight-map literal
+    carries negative entries; the all -1 label ('none') has no errors
+    in epoch 0, so no sentinel row arrives and the model is empty."""
+    from bigdata06_spark.catalog import load_table
+    from bigdata06_spark.operators import classifier as C
+
+    docs = load_table(spark, "documents", sf_dir)
+    if target == "spark":
+        label = F.when(
+            F.array_contains(F.split(F.col("text"), " "), "spark"), 1
+        ).otherwise(-1)
+    else:
+        label = F.lit(-1)
+    labels = {r[0]: r[1] for r in docs.select("doc_id", label.cast("long")).collect()}
+    feats: dict = {}
+    for r in C.hashed_features(docs, dim=1024, binary=True).collect():
+        feats.setdefault(r["doc_id"], {})[r["bucket"]] = r["x"]
+    want = _pocket_reference(feats, labels, epochs)
+    got = sorted(map(tuple, C.perceptron_train(docs, label, epochs=epochs,
+                                               dim=1024).collect()))
+    assert got == want
+    if target == "none":
+        assert got == []
+    elif epochs == 16:
+        assert any(v < 0 for _, v in got) and any(v > 0 for _, v in got)
+
+
+def test_perceptron_train_job_count(spark, sf_dir):
+    """Job-count guard for the epoch loop, read from the status store
+    (job counts, unlike wall time, do not inflate on a busy host).
+    Each epoch is one action over one exchange (two jobs under AQE);
+    the packed features are checkpointed lazily, inside epoch 0's
+    action. 16 epochs + the final evaluation pass at sf0.001 fire 36
+    jobs; the former shape (per-literal Column weight map, a separate
+    error-count aggregate UNIONed in, an eager checkpoint) fired 57."""
+    import uuid
+
+    from bigdata06_spark.catalog import load_table
+    from bigdata06_spark.operators import classifier as C
+
+    docs = load_table(spark, "documents", sf_dir)
+    label = F.when(
+        F.array_contains(F.split(F.col("text"), " "), "spark"), 1
+    ).otherwise(-1)
+    tag = f"perceptron-jobs-{uuid.uuid4().hex[:8]}"
+    spark.addTag(tag)
+    try:
+        C.perceptron_train(docs, label, epochs=16, dim=1024)
+    finally:
+        spark.removeTag(tag)
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    n_jobs = sum(
+        any(t.endswith(f"-{tag}") for t in conv.asJava(j.jobTags()))
+        for j in conv.asJava(sc.statusStore().jobsList(None))
+    )
+    assert n_jobs == 36, f"perceptron_train fired {n_jobs} jobs, expected 36"
 
 
 def test_adaptive_simhash_chunk_rule():

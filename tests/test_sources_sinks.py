@@ -2211,6 +2211,68 @@ def test_lakehouse_occ_concurrent_writers_no_lost_updates(spark, tmp_path):
     assert {txns[f"w{w}"] for w in range(n_writers)} == {n_ops - 1}
 
 
+_TORN_READER = r"""
+import json, os, sys
+sys.path.insert(0, sys.argv[3])
+from bigdata06_spark import lakehouse as LH
+path, stop = sys.argv[1], sys.argv[2]
+torn = reads = 0
+print("ready", flush=True)
+while not os.path.exists(stop):
+    v = LH.current_version(path)
+    if v < 0:
+        continue
+    try:
+        e = LH._read_entry(path, v, bulk=())
+    except json.JSONDecodeError:
+        torn += 1
+        continue
+    reads += 1
+    torn += e["seq"] != v
+print(torn, reads)
+"""
+
+
+def test_lakehouse_log_commit_never_torn(tmp_path):
+    """Spark-free stress of the log commit itself: this process
+    commits 300 entries while a reader process repeatedly resolves the
+    latest version and parses its entry. A version must become visible
+    only with its full content — never empty or half-written — so the
+    reader sees no parse error, and the commit leaves no temp file
+    behind. A lost race on an existing version is still a
+    CommitConflictError."""
+    import subprocess
+    import sys
+
+    from bigdata06_spark import lakehouse as LH
+
+    path = str(tmp_path / "lh_torn")
+    stop = str(tmp_path / "stop")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(LH.__file__)))
+    n = 300
+    pad = ["x" * 64] * 200  # a ~14 KB entry: several write() calls
+    reader = subprocess.Popen(
+        [sys.executable, "-c", _TORN_READER, path, stop, root],
+        stdout=subprocess.PIPE, text=True)
+    try:
+        assert reader.stdout.readline().strip() == "ready"
+        for v in range(n):
+            LH._commit_log(path, v, {"seq": v, "add": pad, "remove": []})
+    finally:
+        open(stop, "w").close()
+        out, _ = reader.communicate(timeout=60)
+    torn, reads = map(int, out.split())
+    assert torn == 0, f"{torn} torn reads of {torn + reads}"
+    assert reads > 0
+    assert LH.current_version(path) == n - 1
+    logd = os.path.join(path, "_log")
+    assert sorted(os.listdir(logd)) == sorted(f"{v}.json" for v in range(n))
+    with pytest.raises(LH.CommitConflictError):
+        LH._commit_log(path, n - 1, {"seq": -1, "add": [], "remove": []})
+    assert LH._read_entry(path, n - 1, bulk=())["seq"] == n - 1
+    assert len(os.listdir(logd)) == n
+
+
 def test_lakehouse_occ_reader_snapshot_isolation(spark, tmp_path):
     """Readers racing a committing writer always see a CONSISTENT
     snapshot: a reader thread repeatedly resolves current_version and
